@@ -1,6 +1,6 @@
 """Distributed connected-components scale point (star contraction).
 
-Builds a synthetic graph ABOVE DRIVER_CC_MAX_EDGES (so the distributed
+Builds a synthetic graph ABOVE budget.MAX_ROWS edges (so the distributed
 large-star/small-star path runs, not the driver union-find): n nodes in
 chains of length g — deliberately the WORST shape for the old min-label
 propagation (diameter = g, so g=100 would have needed 100 rounds and
@@ -25,7 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from kgx import canon
+    from kgx import budget, canon
     from kgx.session import get_spark
 
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 3_000_000
@@ -45,7 +45,7 @@ def main() -> None:
         )
     )
     n_edges = n - n // g
-    assert n_edges > canon.DRIVER_CC_MAX_EDGES, "graph too small to force the distributed path"
+    assert n_edges > budget.MAX_ROWS, "graph too small to force the distributed path"
 
     t0 = time.perf_counter()
     comp = canon.connected_components(nodes, edges)

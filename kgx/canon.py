@@ -31,17 +31,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kgx import budget
+
 N_HASHES = 64
 N_BANDS = 32  # r = 2 rows per band
 JACCARD_THRESHOLD = 0.4
-
-# sig/shingle payload tables under these budgets ship to the candidate
-# gate/verify joins as broadcast hash relations (pair stream never shuffles);
-# above them the joins fall back to shuffles. Sized like the other forced
-# broadcasts in this engine (well under the 8 GB relation cap, small multiple
-# of executor task memory).
-BROADCAST_PAYLOAD_MAX_ROWS = 2_000_000
-BROADCAST_PAYLOAD_MAX_BYTES = 256 * 1024 * 1024
 
 
 def banding_recall(j: float, n_bands: int, rows_per_band: int) -> float:
@@ -474,14 +468,13 @@ def dedup_clusters(
     # payload-join regime decision: reps within a row+byte budget ship their
     # sig/shingle arrays to the candidate checks as broadcast hash relations
     # — the (a,b) pair stream then never shuffles at all; over budget falls
-    # back to the shuffled joins (identical rows either way). The budgets are
+    # back to the shuffled joins (identical rows either way). The budget is
     # checked against the accumulator totals the signature job just filled —
     # an upper bound on the rep payload (reps <= all docs; retries only
-    # inflate it), so no separate probe action runs.
-    broadcast_payloads = (
-        n_acc.value <= BROADCAST_PAYLOAD_MAX_ROWS
-        and b_acc.value <= BROADCAST_PAYLOAD_MAX_BYTES
-    )
+    # inflate it), so no separate probe action runs. The bytes are charged
+    # 4x: candidate_pairs holds four payload relations at once (sigs and
+    # shingle sets, each on both pair sides).
+    broadcast_payloads = budget.fits("canon.payload", n_acc.value, 4 * b_acc.value)
     cand = candidate_pairs(
         reps,
         bucket_cap=bucket_cap,
@@ -544,9 +537,9 @@ def candidate_pairs(
       shuffle ~7x. Set the gate >= 3-4 sigma under the verify threshold so
       true pairs pass with certainty-in-practice (deterministic given sigs,
       so oracle parity is checkable, not probabilistic);
-    - ``broadcast_payloads``: the caller's promise (budget-probed in
-      dedup_clusters) that the sig/shingle payload table fits executor
-      memory as a broadcast hash relation — the pair stream then never
+    - ``broadcast_payloads``: the caller's promise (budget-checked in
+      dedup_clusters) that four copies of the sig/shingle payload table fit
+      executor memory as broadcast hash relations — the pair stream then never
       shuffles through the gate/verify joins. False keeps the shuffled
       joins; output rows identical either way.
     """
@@ -633,9 +626,8 @@ def verified_edges(pairs: DataFrame, threshold: float = JACCARD_THRESHOLD) -> Da
     )
 
 
-DRIVER_CC_MAX_EDGES = 2_000_000  # row threshold for the union-find fast path
-DRIVER_CC_MAX_BYTES = 256 * 1024 * 1024  # byte threshold for the same collect
-DRIVER_CANON_MAX_SURFACES = 1000  # collect threshold for whole-mapping fast path
+# latency crossover between driver all-pairs and LSH — not a memory budget
+DRIVER_CANON_MAX_SURFACES = 1000
 
 
 def _py_shingles(surface: str, shingle: str, k: int = 3) -> frozenset[str]:
@@ -655,6 +647,8 @@ def _driver_canonical_mapping(spark, surfaces, known, shingle, threshold):
     sticky known reps, min-(norm,surface) representative). ``surfaces`` is the
     ALREADY-COLLECTED node list (the caller's path probe collects it once —
     round 7 removed the count-then-collect double execution)."""
+    import pyarrow as pa
+
     from kgx import kernel
     known_pairs = (
         [(r["surface"], r["rep"]) for r in known.collect()] if known is not None else []
@@ -696,19 +690,20 @@ def _driver_canonical_mapping(spark, surfaces, known, shingle, threshold):
     for s in parent:
         comps.setdefault(find(s), []).append(s)
     known_reps = {rep for _, rep in known_pairs}
-    rows = []
+    surf, reps = [], []
     for members in comps.values():
         cands = [m for m in members if m in known_reps] or members
         rep = min(cands, key=lambda v: (kernel.normalize_surface(v), v))
-        rows.extend((m, rep) for m in members)
-    df = spark.createDataFrame(rows, "surface string, rep string")
-    # the mapping rows already live on the driver — expose them so consumers
-    # (canonicalize_proponents, run_checkpointed) can skip the localCheckpoint
-    # pin and the distributed size probe, which are pure latency here
-    # (round 7; createDataFrame yields a LogicalRDD, so plan-level isLocal()
-    # cannot express this)
-    df._kgx_driver_rows = rows
-    return df
+        surf.extend(members)
+        reps.extend([rep] * len(members))
+    # from an Arrow table Spark builds a LocalRelation (df.isLocal()): its
+    # consumers (budget.collect, canonicalize_proponents, run_checkpointed)
+    # see that the rows already live on the driver and skip the
+    # localCheckpoint pin and the size probe, which would be pure latency
+    return spark.createDataFrame(
+        pa.table({"surface": pa.array(surf, pa.string()),
+                  "rep": pa.array(reps, pa.string())})
+    )
 
 
 def connected_components(
@@ -732,8 +727,7 @@ def connected_components(
       relative to the corpus): collect the edge list and union-find on the
       driver — the iterative version costs ~10s of pure scheduler latency for
       a 40-node graph, which dominates small-corpus runs. The fast path is
-      gated on BOTH a row count and an estimated-bytes budget (a 2M-row limit
-      alone would admit multi-GB collects of long keys — round-1 review);
+      gated by ``budget.collect`` (rows AND encoded bytes of the edges);
     - large graphs: distributed large-star/small-star contraction with
       localCheckpoint per round to cut lineage (SURVEY.md §7 'What's hard');
       O(log n) rounds independent of component diameter; deterministic labels
@@ -745,28 +739,19 @@ def connected_components(
     # separate actions that would otherwise each re-run the whole upstream
     # blocking/verification pipeline
     edges = edges.localCheckpoint()
-    # guard FIRST, executor-side: count + byte budget over the bounded
-    # limit(cap+1) slice; the collect happens ONLY after both budgets pass —
-    # an edge set under the row cap but over the byte cap (long CJK
-    # surfaces) must route to the distributed path WITHOUT ever being pulled
-    # onto the driver (see kgx.util.bounded_stats for the idiom's rationale)
-    from kgx.util import bounded_stats
-
-    stats = bounded_stats(
-        edges.select("a", "b"),
-        DRIVER_CC_MAX_EDGES,
-        F.octet_length("a") + F.octet_length("b"),
-    )
-    if stats["n"] <= DRIVER_CC_MAX_EDGES and stats["nbytes"] <= DRIVER_CC_MAX_BYTES:
-        # reads the checkpointed edges, not the upstream pipeline. The touched
-        # mapping is broadcast-hinted: it passed the same row+byte budget the
-        # collect did, but it reaches the planner as a stats-less RDD scan
-        # (createDataFrame), which otherwise defaults every downstream
-        # equi-join to a two-sided shuffle of a driver-sized table (round 7:
-        # the t07 members join shuffled 50k rows to attach 2.4k components).
-        comp = F.broadcast(
-            _driver_cc_from_rows(edges.sparkSession, edges.select("a", "b").collect())
+    placed = budget.collect("canon.cc", edges.select("a", "b"))
+    if isinstance(placed, budget.Resident):
+        rows = _union_find(placed.rows)
+        comp = edges.sparkSession.createDataFrame(
+            rows, "surface string, component string"
         )
+        # the touched mapping reaches the planner as a stats-less RDD scan,
+        # which otherwise defaults every downstream equi-join to a two-sided
+        # shuffle of a driver-sized table (round 7: the t07 members join
+        # shuffled 50k rows to attach 2.4k components) — so broadcast-hint
+        # it when its OWN (surface, component) rows fit the budget
+        if budget.fits("canon.cc_broadcast", len(rows), budget.rows_nbytes(rows)):
+            comp = F.broadcast(comp)
     else:
         touched = (
             edges.select(F.col("a").alias("surface"))
@@ -797,11 +782,10 @@ def connected_components(
     )
 
 
-def _driver_cc_from_rows(spark, edge_rows, extra_surfaces=()) -> DataFrame:
-    """Union-find over an ALREADY-COLLECTED edge list (the caller collects
-    the checkpointed edges once the executor-side row+byte guard passes).
-    Touched nodes are the edge endpoints; callers add ``extra_surfaces`` for
-    nodes that must appear as singletons."""
+def _union_find(edge_rows, extra_surfaces=()) -> list[tuple[str, str]]:
+    """(surface, component) rows by union-find over an ALREADY-COLLECTED
+    edge list. Touched nodes are the edge endpoints; callers add
+    ``extra_surfaces`` for nodes that must appear as singletons."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -825,14 +809,14 @@ def _driver_cc_from_rows(spark, edge_rows, extra_surfaces=()) -> DataFrame:
     # distributed 'h:'+hash, isolated 's:'+surface) are disjoint BY CONSTRUCTION
     # — a raw surface that literally looks like another path's label (e.g.
     # 'h:123') could otherwise merge unrelated groups
-    rows = [(s, "s:" + find(s)) for s in parent]
-    return spark.createDataFrame(rows, "surface string, component string")
+    return [(s, "s:" + find(s)) for s in parent]
 
 
 def _driver_cc(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     surfaces = [r[0] for r in nodes.select("surface").distinct().collect()]
-    return _driver_cc_from_rows(
-        nodes.sparkSession, edges.select("a", "b").collect(), surfaces
+    return nodes.sparkSession.createDataFrame(
+        _union_find(edges.select("a", "b").collect(), surfaces),
+        "surface string, component string",
     )
 
 

@@ -50,6 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgx import budget
 from kgx.ops import load
 
 # ---------------------------------------------------------------------------
@@ -126,15 +127,6 @@ G01_SQL = f"WITH {_TRIPLES_CTE} SELECT subj, pred, obj FROM triples"
 
 # --- g02: seeded 2-hop traversal (SPARQL-BGP-style chain) ------------------- #
 N_SEED_SUPPLIERS = 5
-
-# sameAs rewrite: broadcast the canonical mapping only within BOTH budgets
-# (rows AND encoded bytes — a row cap alone admits multi-GB broadcasts of
-# long surfaces); over budget the rewrite falls back to shuffle joins,
-# which stay correct at any mapping size. ~2M rows / 256 MB mirrors the
-# pipeline's proponent-dictionary budget: an alias population past that is
-# no longer "small dim" territory.
-SAMEAS_BROADCAST_MAX_ROWS = 2_000_000
-SAMEAS_BROADCAST_MAX_BYTES = 256 * 1024 * 1024
 
 
 def g02_two_hop_neighbors(spark: SparkSession, sf: str) -> DataFrame:
@@ -602,22 +594,10 @@ def resolve_sameas(triples: DataFrame, edges: DataFrame) -> DataFrame:
     # the pinned mapping is an ExistingRDD scan with NO stats, so Catalyst
     # defaults both rewrite joins to SortMergeJoin — shuffling the CORPUS
     # side twice (subj, then obj) for an alias-sized dictionary. Broadcast
-    # it under the engine's row+byte budget (the F.broadcast-forces-past-
-    # autoBroadcastJoinThreshold hazard is guarded, same idiom as the
-    # streaming skip probe): within budget the triple side never shuffles
-    # for the rewrite and the plan is build + ONE distinct exchange.
-    from kgx.util import bounded_stats
-
-    stats = bounded_stats(
-        mapping,
-        SAMEAS_BROADCAST_MAX_ROWS,
-        F.octet_length("surface") + F.octet_length("canon"),
-    )
-    if (
-        stats["n"] <= SAMEAS_BROADCAST_MAX_ROWS
-        and stats["nbytes"] <= SAMEAS_BROADCAST_MAX_BYTES
-    ):
-        mapping = F.broadcast(mapping)
+    # it under the engine budget: within it the triple side never shuffles
+    # for the rewrite and the plan is build + ONE distinct exchange; over it
+    # the rewrite falls back to shuffle joins, correct at any mapping size.
+    mapping = budget.broadcast("graph.sameas", mapping)
     sub_m = mapping.withColumnRenamed("surface", "subj").withColumnRenamed(
         "canon", "canon_subj"
     )

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kgx import budget
 from kgx.ops import load
 
 
@@ -146,15 +147,16 @@ def q07_composite_join(spark: SparkSession, sf: str) -> DataFrame:
     # Round 7: the year filter is applied before the join (Catalyst pushed it
     # down anyway) and the filtered two-column orders slice is broadcast —
     # the planner kept a sort-merge join that shuffled all of lineitem to
-    # attach a dimension slice a fraction its size (guide §3.1: hint when
-    # you know the side is small; one year of (key, priority) pairs stays
-    # megabytes at bench scales). Dropping the hint degrades to the shuffled
-    # join, never to an error.
+    # attach a dimension slice a fraction its size. One year of (key,
+    # priority) pairs stays megabytes at bench scales but grows linearly
+    # with the scale factor, so the hint is budget-gated: over budget the
+    # join stays shuffled instead of failing the broadcast.
     o96 = o.filter(F.year("o_orderdate") == 1996).select(
         "o_orderkey", "o_orderpriority"
     )
     return (
-        li.join(F.broadcast(o96), li.l_orderkey == o96.o_orderkey)
+        li.join(budget.broadcast("relational.q07", o96),
+                li.l_orderkey == o96.o_orderkey)
         .groupBy("o_orderpriority")
         .agg(
             F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2)

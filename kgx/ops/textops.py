@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kgx import budget
 from kgx.ops import load
 from kgx.util import spread
 
@@ -786,10 +787,6 @@ FROM m
 
 
 # --- corpus-LM negative log-likelihood (CCNet-style perplexity proxy) ------------------ #
-# row+byte budget for broadcasting the vocabulary frequency table (same
-# guarded-broadcast idiom as graph.SAMEAS_BROADCAST_* / streaming's skip probe)
-FREQ_BROADCAST_MAX_ROWS = 2_000_000
-FREQ_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
 
 
 def t15_unigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
@@ -822,13 +819,10 @@ def t15_unigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
     stats = freq.agg(
         F.sum("cnt").alias("total"),
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.octet_length("tok") + F.lit(8)).alias("nbytes"),
+        F.sum(budget.row_bytes(freq)).alias("nbytes"),
     ).first()
     total = float(stats["total"])
-    if (
-        stats["n"] <= FREQ_BROADCAST_MAX_ROWS
-        and stats["nbytes"] <= FREQ_BROADCAST_MAX_BYTES
-    ):
+    if budget.fits("textops.t15", stats["n"], stats["nbytes"]):
         freq = F.broadcast(freq)
     contrib = F.round(
         F.col("tf") * F.log(F.col("cnt") / F.lit(total)) * 1_000_000.0, 0
@@ -976,11 +970,6 @@ FROM kept CROSS JOIN cuts
 DECON_GRAM_K = 5
 # deterministic "eval set": every 97th doc stands in for the benchmark corpus
 DECON_EVAL_MOD = 97
-# row+byte budget for broadcasting the eval gram set: a REAL benchmark suite
-# fits easily, but this op's self-contained eval carve is O(corpus/97), so an
-# unguarded broadcast would grow with the corpus (review round 6)
-EVAL_BROADCAST_MAX_ROWS = 2_000_000
-EVAL_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
 
 
 def t18_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
@@ -1018,18 +1007,11 @@ def t18_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     train = grams_of(d.filter(F.col("doc_id") % DECON_EVAL_MOD != 0)).select(
         "doc_id", F.explode(F.array_distinct("grams")).alias("gram")
     )
-    from kgx.util import bounded_stats
-
-    probe = bounded_stats(
-        ev, EVAL_BROADCAST_MAX_ROWS, F.octet_length("gram") + F.lit(16)
-    )
-    if (
-        probe["n"] <= EVAL_BROADCAST_MAX_ROWS
-        and probe["nbytes"] <= EVAL_BROADCAST_MAX_BYTES
-    ):
-        ev = F.broadcast(ev)
+    # a REAL benchmark suite fits the budget easily, but this op's
+    # self-contained eval carve is O(corpus/97), so an unguarded broadcast
+    # would grow with the corpus (review round 6)
     return (
-        train.join(ev, "gram")
+        train.join(budget.broadcast("textops.t18", ev), "gram")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_shared_grams"))
     )

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kgx import canon, extract, kernel, sections, textextract
+from kgx import budget, canon, extract, kernel, sections, textextract
 
 
 def subj_col(url_col):
@@ -44,10 +44,6 @@ _REWRITE_SCHEMA = T.StructType(
         T.StructField("obj", T.StringType(), True),
     ]
 )
-
-
-BROADCAST_MAPPING_MAX = 2_000_000  # dictionary rows broadcastable to workers
-BROADCAST_MAPPING_MAX_BYTES = 256 * 1024 * 1024  # byte budget for the same dict
 
 
 def _rewrite_obj(obj: str, mapping) -> str:
@@ -159,6 +155,14 @@ def _rewrite_join(props: DataFrame, mapping: DataFrame) -> DataFrame:
     )
 
 
+def _pin(mapping: DataFrame) -> DataFrame:
+    """localCheckpoint a computed mapping so its size probe, collect and
+    consumers read ONE execution of the LSH+CC pipeline. A local (driver-
+    built) mapping is already materialized: pinning it would be a pure-
+    latency job, so it passes through."""
+    return mapping if mapping.isLocal() else mapping.localCheckpoint()
+
+
 def canonicalize_proponents(facts: DataFrame, mapping: DataFrame | None = None) -> DataFrame:
     """Rewrite proponent org names to their canonical representative.
 
@@ -168,59 +172,38 @@ def canonicalize_proponents(facts: DataFrame, mapping: DataFrame | None = None) 
     (caught by verification: 2-unit run disagreed with the one-shot run on
     ~2.6%% of proponent triples until the mapping was hoisted).
 
-    Two physical regimes, byte-equal output (asserted in tests):
+    Two physical regimes, byte-equal output (asserted in tests), chosen by
+    ``budget.collect``:
 
-    - dictionary <= BROADCAST_MAPPING_MAX rows (the norm — entity dictionaries
-      are vastly smaller than the corpus): ship it as a broadcast python dict
-      into an Arrow batch pass — zero shuffles (the explode -> join ->
+    - ``Resident`` dictionary (the norm — entity dictionaries are vastly
+      smaller than the corpus): ship it as a broadcast python dict into an
+      Arrow batch pass — zero shuffles (the explode -> join ->
       groupBy-collect shape shuffles every proponent fact twice and was a
       measurable non-scaling cost when used unconditionally);
-    - above the cap: the relational join rewrite (_rewrite_join) — slower but
-      scales to any dictionary size instead of raising (round-3 review: the
-      engine's one hard scale cliff was an error message)."""
+    - ``Distributed`` (over budget): the relational join rewrite
+      (_rewrite_join) — slower but scales to any dictionary size instead of
+      raising (round-3 review: the engine's one hard scale cliff was an
+      error message)."""
+    if mapping is None:
+        mentions = facts.filter(F.col("pred") == "project_proponents").select(
+            F.explode("surfaces").alias("surface")
+        )
+        mapping = _pin(canon.canonical_mapping(mentions))
+    return _canonicalize(facts, budget.collect("pipeline.rewrite", mapping))
+
+
+def _canonicalize(
+    facts: DataFrame, mapping: budget.Resident | budget.Distributed
+) -> DataFrame:
     props = facts.filter(F.col("pred") == "project_proponents")
     others = facts.filter(F.col("pred") != "project_proponents").select(
         "url", "warc_ts", "content_sha", "pred", "obj"
     )
-    if mapping is None:
-        mentions = props.select(F.explode("surfaces").alias("surface"))
-        # localCheckpoint: the size probe and the chosen rewrite are separate
-        # actions that would otherwise each re-run the whole LSH+CC pipeline.
-        # A driver-built mapping carries its rows on the Python object
-        # (_kgx_driver_rows) — re-"computing" it is free, so the checkpoint
-        # job is pure latency and is skipped (round 7).
-        mapping = canon.canonical_mapping(mentions)
-        if getattr(mapping, "_kgx_driver_rows", None) is None:
-            mapping = mapping.localCheckpoint()
-
-    # regime probe runs EXECUTOR-SIDE before any collect: a dictionary over
-    # either budget must route to the join path WITHOUT first being pulled
-    # onto the driver (see kgx.util.bounded_stats for the idiom's rationale).
-    # A driver-built mapping's rows are ALREADY driver-resident — collecting
-    # them is a no-op and the distributed probe would only add a job, so the
-    # budget check runs over the attached rows directly (round 7).
-    from kgx.util import bounded_stats
-
-    rows = getattr(mapping, "_kgx_driver_rows", None)
-    if rows is not None:
-        nbytes = sum(len(s.encode()) + len(r.encode()) for s, r in rows)
-        over = len(rows) > BROADCAST_MAPPING_MAX or nbytes > BROADCAST_MAPPING_MAX_BYTES
+    if isinstance(mapping, budget.Distributed):
+        rewritten = _rewrite_join(props, mapping.df)
     else:
-        stats = bounded_stats(
-            mapping,
-            BROADCAST_MAPPING_MAX,
-            F.octet_length("surface") + F.octet_length("rep"),
-        )
-        over = (
-            stats["n"] > BROADCAST_MAPPING_MAX
-            or stats["nbytes"] > BROADCAST_MAPPING_MAX_BYTES
-        )
-    if over:
-        rewritten = _rewrite_join(props, mapping)
-    else:
-        if rows is None:
-            rows = [(r["surface"], r["rep"]) for r in mapping.collect()]
-        mapping_dict = {s: rep for s, rep in rows if s != rep}
+        pairs = ((r["surface"], r["rep"]) for r in mapping.rows)
+        mapping_dict = {s: rep for s, rep in pairs if s != rep}
         bc = facts.sparkSession.sparkContext.broadcast(mapping_dict)
         rewritten = props.select(
             "url", "warc_ts", "content_sha", "pred", "obj"
@@ -357,14 +340,13 @@ def run_checkpointed(
         )
         mentions = m if mentions is None else mentions.unionByName(m)
     known = store.known_entities(spark)
-    mapping = canon.canonical_mapping(mentions, known=known)
-    if getattr(mapping, "_kgx_driver_rows", None) is None:
-        # driver-built mappings need no pin (see canonicalize_proponents)
-        mapping = mapping.localCheckpoint()
+    mapping = _pin(canon.canonical_mapping(mentions, known=known))
     # persist BEFORE commits: a run killed mid-phase-C resumes with the exact
     # same representative assignment (mapping is deterministic given its node
     # set, and the saved dictionary carries the full node set forward)
     store.save_entities(mapping)
+    # placed once for every unit: one size probe and collect, not one per unit
+    placed = budget.collect("pipeline.rewrite", mapping)
 
     # phase C: commit each staged unit with the shared mapping
     unit_ids = []
@@ -374,7 +356,7 @@ def run_checkpointed(
             # killed between commit and consume on a previous run: don't double-commit
             store.consume_staged(s["key"])
             continue
-        final = canonicalize_proponents(facts, mapping)
+        final = _canonicalize(facts, placed)
         flagged, metrics = extract.validate_triples(_to_triples(final))
         # the content sidecar comes from the staged facts parquet — a pruned
         # scan — rather than commit's triples-derived default (a second read

@@ -27,18 +27,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kgx import canon, extract, pipeline
+from kgx import budget, canon, extract, pipeline
 from kgx.schema import PAGES
 
 # entity-dictionary snapshots are folded into one dir past this count, so an
 # un-vacuumed long-running stream holds O(1) dirs, not O(epochs)
 ENTITY_FOLD_MAX_DIRS = 16
-
-# budgets for the skip-canonicalization probe's forced broadcast of the
-# per-batch mention set (F.broadcast bypasses autoBroadcastJoinThreshold, so
-# the guard must live here); over-budget batches take the full path
-SKIP_PROBE_MAX_MENTIONS = 1_000_000
-SKIP_PROBE_MAX_BYTES = 64 * 1024 * 1024
 
 
 def _stream_run_id(store) -> str | None:
@@ -438,7 +432,7 @@ def _finish_epoch(
         # big to broadcast); broadcasting the per-batch mention set into an
         # inner join instead scans the dictionary in place — no exchange —
         # and compares hit count to mention count. The broadcast is guarded
-        # by row AND byte budgets computed executor-side (F.broadcast forces
+        # by the engine budget, measured executor-side (F.broadcast forces
         # the hash join regardless of autoBroadcastJoinThreshold, so an
         # unguarded giant-backlog epoch would OOM the driver); an over-budget
         # mention set just takes the full canonicalization path, which
@@ -448,22 +442,15 @@ def _finish_epoch(
         # deterministically released, so epochs leave no one-use blocks.
         from pyspark import StorageLevel
 
-        from kgx.util import bounded_stats
-
         m = mentions.distinct().persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            stats = bounded_stats(
-                m, SKIP_PROBE_MAX_MENTIONS, F.octet_length("surface")
-            )
-            if (
-                stats["n"] <= SKIP_PROBE_MAX_MENTIONS
-                and stats["nbytes"] <= SKIP_PROBE_MAX_BYTES
-            ):
+            n, nbytes = budget.bounded_stats(m)
+            if budget.fits("streaming.skip_probe", n, nbytes):
                 n_hit = (
                     known.join(F.broadcast(m), "surface")
                     .select("surface").distinct().count()
                 )
-                skip = n_hit == stats["n"]
+                skip = n_hit == n
         finally:
             m.unpersist()
     if skip:

@@ -3,32 +3,6 @@
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-def bounded_stats(df: DataFrame, max_rows: int, nbytes_expr):
-    """Executor-side (count, byte-sum) probe over a ``limit(max_rows + 1)``
-    slice — the safe way to ask "is this frame within a row AND byte budget"
-    BEFORE any collect/broadcast of it.
-
-    The limit bounds the work; ``octet_length``-based ``nbytes_expr`` counts
-    utf-8 ENCODED bytes so multi-byte text can't undercount 2-4x; and doing
-    it as an aggregate keeps the probe off the driver — collecting cap+1
-    rows to measure them is itself the OOM the budget exists to prevent
-    (the collect-as-probe hazard, fixed repeatedly in review rounds 3-5;
-    this helper is the single home for the idiom).
-
-    Returns a Row with fields ``n`` and ``nbytes``. When ``n`` comes back
-    equal to ``max_rows + 1`` the frame is over-budget and the true count is
-    unknown (the slice stopped counting)."""
-    return (
-        df.limit(max_rows + 1)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum(nbytes_expr), F.lit(0)).alias("nbytes"),
-        )
-        .first()
-    )
 
 
 def spread(df: DataFrame, factor: int = 2) -> DataFrame:

@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from kgx import canon, fixtures, kernel
+from kgx import budget, canon, fixtures, kernel
 
 
 def test_normalize_and_shingles_jvm_parity(spark):
@@ -85,7 +85,7 @@ def test_connected_components_chain(spark, impl):
 def test_cc_byte_guard_forces_distributed_path(spark, monkeypatch):
     """Edge lists under the row cap but over the byte budget must take the
     distributed path (driver collect is gated on BOTH)."""
-    monkeypatch.setattr(canon, "DRIVER_CC_MAX_BYTES", 0)
+    monkeypatch.setattr(budget, "MAX_BYTES", 0)
     nodes = spark.createDataFrame([(s,) for s in "abcdef"], "surface string")
     edges = spark.createDataFrame([("a", "b"), ("c", "d")], "a string, b string")
     comp = canon.connected_components(nodes, edges)
@@ -172,7 +172,7 @@ def test_distributed_cc_long_chain_converges(spark, monkeypatch):
     labels = {r.surface: r.component for r in canon._distributed_cc(nodes, edges).collect()}
     assert len(set(labels.values())) == 1
     # and through the public entry point with the driver path disabled
-    monkeypatch.setattr(canon, "DRIVER_CC_MAX_EDGES", 0)
+    monkeypatch.setattr(budget, "MAX_ROWS", 0)
     labels2 = {
         r.surface: r.component
         for r in canon.connected_components(nodes, edges).collect()
@@ -263,7 +263,7 @@ def test_verified_edges_distinct_despite_multiband_candidates(spark):
     assert [(r.a, r.b) for r in edges] == [("a", "b")]
 
 
-def test_dedup_payload_budget_falls_back_to_shuffle(spark, monkeypatch):
+def test_dedup_payload_budget_falls_back_to_shuffle(spark, over_budget):
     """Round 7: the broadcast-payload budget (fed by the signature job's
     accumulators) must route oversized payloads to the shuffled joins and
     produce identical clusters."""
@@ -272,8 +272,76 @@ def test_dedup_payload_budget_falls_back_to_shuffle(spark, monkeypatch):
     labels = {
         int(r.doc_id): r.component for r in canon.dedup_clusters(docs).collect()
     }
-    monkeypatch.setattr(canon, "BROADCAST_PAYLOAD_MAX_ROWS", 0)
+    over_budget("canon.payload")
     labels_shuffle = {
         int(r.doc_id): r.component for r in canon.dedup_clusters(docs).collect()
     }
     assert labels == labels_shuffle
+
+
+def _gate_sizes(monkeypatch) -> dict:
+    """Record the (rows, bytes) each budget gate is asked about, by gate."""
+    seen, fits = {}, budget.fits
+
+    def spy(gate, n, nbytes):
+        seen[gate] = (n, nbytes)
+        return fits(gate, n, nbytes)
+
+    monkeypatch.setattr(budget, "fits", spy)
+    return seen
+
+
+def test_dedup_payload_gate_charges_four_payload_copies(spark, monkeypatch):
+    """candidate_pairs holds four payload relations at once (sigs and
+    shingle sets, each on both pair sides), so the payload gate is charged
+    4x the signature rows' bytes (id + shingle-hash and signature arrays)."""
+    rows = [(i, f"doc number {i} says alpha beta gamma delta {i % 3}") for i in range(12)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    sigs = docs.select(
+        F.col("doc_id").cast("string").alias("surface"), F.col("text").alias("_text")
+    ).mapInArrow(canon._keyed_sig_gen("token", 3), schema=canon._KEYED_SCHEMA)
+    payload = sum(
+        len(r.surface.encode()) + 8 * (len(r.sh_hash) + len(r.sig))
+        for r in sigs.collect()
+    )
+    seen = _gate_sizes(monkeypatch)
+    canon.dedup_clusters(docs).collect()
+    assert seen["canon.payload"] == (12, 4 * payload)
+
+
+def _cc_input(spark):
+    nodes = spark.createDataFrame([(s,) for s in ["Ünï", "b", "c", "d", "z"]],
+                                  "surface string")
+    edges = spark.createDataFrame([("Ünï", "b"), ("c", "d")], "a string, b string")
+    return nodes, edges
+
+
+def test_cc_broadcast_hint_sized_by_mapping_rows(spark, monkeypatch):
+    """The driver-CC mapping is broadcast-hinted by the bytes of its OWN
+    (surface, component) rows, not by the edges' bytes."""
+    nodes, edges = _cc_input(spark)
+    seen = _gate_sizes(monkeypatch)
+    comp = canon.connected_components(None, edges).collect()
+    assert seen["canon.cc_broadcast"] == (
+        4, sum(len(r.surface.encode()) + len(r.component.encode()) for r in comp)
+    )
+    assert seen["canon.cc"] == (2, len("Ünïbcd".encode()))
+
+
+def test_cc_broadcast_hint_fallback_identical(spark, over_budget):
+    """Over budget the driver-CC mapping is joined without the broadcast
+    hint, with identical rows."""
+    nodes, edges = _cc_input(spark)
+
+    def run():
+        df = canon.connected_components(nodes, edges)
+        return df._jdf.queryExecution().executedPlan().toString(), sorted(
+            tuple(r) for r in df.collect()
+        )
+
+    plan, expected = run()
+    assert "BroadcastHashJoin" in plan, plan
+    over_budget("canon.cc_broadcast")
+    plan, got = run()
+    assert "BroadcastHashJoin" not in plan, plan
+    assert got == expected and ("z", "s:z") in got

@@ -442,20 +442,18 @@ def test_bgp_empty_pattern_raises(spark):
         graph.match_bgp(t, [])
 
 
-def test_resolve_sameas_distributed_cc_path_identical(spark, monkeypatch):
-    """Force the large-star/small-star CC path (the 100 TB regime) by zeroing
-    the driver-CC budget: the resolution must be identical to the fast path
+def test_resolve_sameas_distributed_cc_path_identical(spark, over_budget):
+    """Force the large-star/small-star CC path (the 100 TB regime) by sending
+    the driver-CC gate over budget: the resolution must be identical to the fast path
     — component labels differ between strategies, but the canonical rewrite
     depends only on grouping + min(surface)."""
-    from kgx import canon
-
     triples = spark.createDataFrame(
         [("x2", "likes", "y"), ("x3", "likes", "y"), ("q", "likes", "x3")],
         "subj string, pred string, obj string",
     )
     edges = _edges(spark, [("x1", "x2"), ("x2", "x3")])
     want = {tuple(r) for r in graph.resolve_sameas(triples, edges).collect()}
-    monkeypatch.setattr(canon, "DRIVER_CC_MAX_EDGES", 0)
+    over_budget("canon.cc")
     got = {tuple(r) for r in graph.resolve_sameas(triples, edges).collect()}
     assert got == want == {("x1", "likes", "y"), ("q", "likes", "x1")}
 

@@ -10,7 +10,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from kgx import extract, fixtures, kernel, pipeline, sections, textextract
+from kgx import budget, canon, extract, fixtures, kernel, pipeline, sections, textextract
 
 N_PAGES = 200
 
@@ -175,12 +175,12 @@ def test_triples_pr_vs_golden(spark, pages_df, pages_rows):
     assert recall >= 0.95, f"recall {recall}"
 
 
-def test_join_rewrite_byte_equal_to_broadcast(spark, pages_df, monkeypatch):
-    """Entity dictionaries above BROADCAST_MAPPING_MAX take the relational
+def test_join_rewrite_byte_equal_to_broadcast(spark, pages_df, over_budget):
+    """Entity dictionaries over the budget take the relational
     join rewrite; its triples must be byte-equal to the broadcast path (the
     cap is a physical-strategy switch, never a semantics switch)."""
     expected = sorted(tuple(r) for r in pipeline.build_triples(spark, pages_df).collect())
-    monkeypatch.setattr(pipeline, "BROADCAST_MAPPING_MAX", 0)
+    over_budget("pipeline.rewrite")
     got = sorted(tuple(r) for r in pipeline.build_triples(spark, pages_df).collect())
     assert got == expected
     # the corpus genuinely exercises the rewrite: canonicalization changed
@@ -285,7 +285,7 @@ def test_fused_extract_guards_unsplittable_input(spark, tmp_path):
     assert out.rdd.getNumPartitions() >= max(2, cores // 2)
 
 
-def test_join_rewrite_edge_shapes(spark, monkeypatch):
+def test_join_rewrite_edge_shapes(spark, over_budget):
     """_rewrite_join on crafted shapes the fixture corpus may not cover:
     duplicate surfaces within one fact, an empty surfaces array (posexplode
     drops the row; the left join must bring it back unrewritten), multi-byte
@@ -321,7 +321,7 @@ def test_join_rewrite_edge_shapes(spark, monkeypatch):
     expected = sorted(
         tuple(r) for r in pipeline.canonicalize_proponents(facts, mapping).collect()
     )
-    monkeypatch.setattr(pipeline, "BROADCAST_MAPPING_MAX", 0)
+    over_budget("pipeline.rewrite")
     got = sorted(
         tuple(r) for r in pipeline.canonicalize_proponents(facts, mapping).collect()
     )
@@ -334,7 +334,7 @@ def test_join_rewrite_edge_shapes(spark, monkeypatch):
     assert by_url["u5"] == obj_of(["Acme Corp"])
 
 
-def test_join_rewrite_duplicate_natural_key_rows(spark, monkeypatch):
+def test_join_rewrite_duplicate_natural_key_rows(spark, over_budget):
     """Two proponent facts from the SAME crawl (a page with two sections that
     both categorize project_proponents — kernel.page_facts emits one fact per
     section): the join-path rewrite must keep each row's surfaces zipped to
@@ -367,7 +367,7 @@ def test_join_rewrite_duplicate_natural_key_rows(spark, monkeypatch):
     expected = sorted(
         tuple(r) for r in pipeline.canonicalize_proponents(facts, mapping).collect()
     )
-    monkeypatch.setattr(pipeline, "BROADCAST_MAPPING_MAX", 0)
+    over_budget("pipeline.rewrite")
     got = sorted(
         tuple(r) for r in pipeline.canonicalize_proponents(facts, mapping).collect()
     )
@@ -391,10 +391,28 @@ def test_broadcast_byte_budget_routes_to_join_path(spark, monkeypatch):
     mapping = spark.createDataFrame(
         [("Acme Corp", "ACME")], "surface string, rep string"
     )
-    monkeypatch.setattr(pipeline, "BROADCAST_MAPPING_MAX_BYTES", 0)
+    monkeypatch.setattr(budget, "MAX_BYTES", 0)
     out = {t["obj"] for t in
            pipeline.canonicalize_proponents(facts, mapping).collect()}
     assert out == {kernel.canonical_json([{"organization_name": "ACME"}])}
+
+
+def test_driver_mapping_is_placed_without_a_spark_job(spark):
+    """The driver-built canonical mapping is a LocalRelation: consumers skip
+    its checkpoint pin, and the rewrite gate measures and collects it
+    without running a Spark job (an RDD-backed mapping once made both
+    guards dead code)."""
+    mentions = spark.createDataFrame([("Acme Corp",), ("ACME CORP",)], "surface string")
+    mapping = canon.canonical_mapping(mentions)
+    assert mapping.isLocal() and pipeline._pin(mapping) is mapping
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "kgx-driver-mapping")
+    try:
+        placed = budget.collect("pipeline.rewrite", mapping)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert isinstance(placed, budget.Resident) and len(placed.rows) == 2
+    assert list(sc.statusTracker().getJobIdsForGroup("kgx-driver-mapping")) == []
 
 
 def test_duplicate_category_sections_stay_separate(spark):

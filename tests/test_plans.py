@@ -140,30 +140,6 @@ def test_ivf_training_assignment_plan_is_map_only(spark):
     assert plan.index("HashAggregate") < plan.index("Exchange"), plan[:1200]
 
 
-def test_salted_join_partitions_by_salt(spark):
-    """The salted join's exchange must hash-partition on (key, _salt) so a hot
-    key spreads across `salt` reducer partitions (the helper's entire point —
-    see kgx/ops/skew.py for when to actually use it)."""
-    from kgx.ops.skew import salted_join
-
-    fact = spark.range(0, 10_000, 1, 8).selectExpr(
-        "'hot' AS domain", "id", "CAST(id AS STRING) AS payload"
-    )
-    dim = spark.createDataFrame([("hot", "m")], "domain string, meta string")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = _plan(salted_join(fact, dim, "domain", salt=8))
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    # the exchange must hash-partition on _salt (a constant hot key is even
-    # constant-folded out of the key list, leaving _salt as the ONLY
-    # distribution column — the strongest form of the property)
-    import re
-
-    exchanges = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
-    assert exchanges and all("_salt" in e for e in exchanges), plan[:1500]
-
-
 def test_triangle_plan_reuses_pinned_edges(spark):
     """count_triangles fans the slim edge list into four plan branches
     (degree, orientation, wedge x2, closing x2); without the edge/ranked
@@ -271,7 +247,7 @@ def test_sameas_rewrite_broadcasts_mapping_within_budget(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_sameas_rewrite_shuffle_fallback_over_budget(spark, monkeypatch):
+def test_sameas_rewrite_shuffle_fallback_over_budget(spark, over_budget):
     """Over budget the rewrite must fall back to shuffle joins and still
     produce identical output."""
     from kgx.ops import graph
@@ -279,7 +255,7 @@ def test_sameas_rewrite_shuffle_fallback_over_budget(spark, monkeypatch):
     expected = {
         tuple(r) for r in graph.g08_sameas_resolution(spark, SF).collect()
     }
-    monkeypatch.setattr(graph, "SAMEAS_BROADCAST_MAX_ROWS", 1)
+    over_budget("graph.sameas")
     df = graph.g08_sameas_resolution(spark, SF)
     plan = _plan(df)
     assert "BroadcastHashJoin" not in plan or "SortMergeJoin" in plan
@@ -312,7 +288,7 @@ def test_gopher_quality_plan_is_map_only(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_unigram_freq_broadcasts_within_budget(spark, monkeypatch):
+def test_unigram_freq_broadcasts_within_budget(spark, over_budget):
     """t15's vocabulary table is O(vocab) and derives from the tf aggregate;
     within the row+byte budget it must broadcast back onto tf (the corpus
     side never re-shuffles for the probability join), and over budget the
@@ -324,7 +300,7 @@ def test_unigram_freq_broadcasts_within_budget(spark, monkeypatch):
     assert "BroadcastHashJoin" in plan, plan[:1500]
     assert "SortMergeJoin" not in plan
     expected = {tuple(r) for r in df.collect()}
-    monkeypatch.setattr(textops, "FREQ_BROADCAST_MAX_ROWS", 0)
+    over_budget("textops.t15")
     df2 = textops.t15_unigram_logprob(spark, SF)
     assert {tuple(r) for r in df2.collect()} == expected
 
@@ -366,3 +342,20 @@ def test_simhash_char_fold_behind_generate_barrier(spark):
     df = textops.t08_simhash(spark, SF)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert re.search(r"aggregate\(lambdavariable|aggregate\(hs#\d+", plan), plan[:1200]
+
+
+def test_q07_year_slice_broadcast_is_budget_gated(spark, over_budget):
+    """q07 hints its year-filtered orders slice broadcast within budget; over
+    budget the join stays shuffled with identical rows. Auto-broadcast is
+    off so the plan shows the hint alone."""
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        df = R.q07_composite_join(spark, SF)
+        assert "BroadcastHashJoin" in _plan(df), _plan(df)[:1500]
+        expected = sorted(tuple(r) for r in df.collect())
+        over_budget("relational.q07")
+        df = R.q07_composite_join(spark, SF)
+        assert "BroadcastHashJoin" not in _plan(df), _plan(df)[:1500]
+        assert sorted(tuple(r) for r in df.collect()) == expected
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")

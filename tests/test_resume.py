@@ -64,18 +64,18 @@ def test_kill_and_resume_identical(spark, small_pages, tmp_path):
 
 @pytest.mark.parametrize("kill_after", [1, 2])
 def test_join_rewrite_kill_and_resume_identical(
-    spark, small_pages, tmp_path, monkeypatch, kill_after
+    spark, small_pages, tmp_path, over_budget, kill_after
 ):
     """Mid-phase-C crash recovery on the >cap JOIN rewrite path (VERDICT r5
-    #6): force the natural-key relational rewrite by zeroing the broadcast
-    cap, kill after the 1st and after the 2nd commit, resume, and assert the
-    store matches the plain one-shot (broadcast-path) triples exactly — the
-    round-5 claim that _rewrite_join is fully lineage-recoverable with no
-    non-replicated state, pinned through the real crash seam at two
-    different phase-C progress points."""
+    #6): force the natural-key relational rewrite by sending the rewrite
+    gate over budget, kill after the 1st and after the 2nd commit, resume,
+    and assert the store matches the plain one-shot (broadcast-path)
+    triples exactly — the round-5 claim that _rewrite_join is fully
+    lineage-recoverable with no non-replicated state, pinned through the
+    real crash seam at two different phase-C progress points."""
     oneshot = _triple_set(pipeline.build_triples(spark, small_pages))
 
-    monkeypatch.setattr(pipeline, "BROADCAST_MAPPING_MAX", 0)
+    over_budget("pipeline.rewrite")
     root = str(tmp_path / f"jk{kill_after}")
     crashing = _KillAfterNCommits(root, n_buckets=8)
     crashing.kill_after = kill_after

@@ -590,6 +590,45 @@ def test_all_known_mentions_skip_canonicalization(spark, tmp_path, monkeypatch):
     caches.release()
 
 
+def test_over_budget_mentions_take_full_canonicalization(
+    spark, tmp_path, monkeypatch, over_budget
+):
+    """Over the skip probe's budget an all-known mention set must take the
+    full canonicalization path instead of the broadcast probe, and commit
+    the same store as the skip path."""
+    import pandas as pd
+
+    calls = {"n": 0}
+    orig = streaming.canon.canonical_mapping
+
+    def spy(*a, **k):
+        calls["n"] += 1
+        return orig(*a, **k)
+
+    monkeypatch.setattr(streaming.canon, "canonical_mapping", spy)
+    pages = fixtures.gen_pages(6)
+    moved = [{**p, "url": p["url"].replace("/proj/", "/proj/9")} for p in pages]
+
+    def drain(name):
+        calls["n"] = 0
+        store = TripleStore(str(tmp_path / name), n_buckets=4)
+        store.claim_mode("streaming")
+        caches = streaming._EpochCaches()
+        for epoch, batch in enumerate((pages, moved)):
+            assert streaming._process_epoch(
+                spark, store, spark.createDataFrame(pd.DataFrame(batch)), epoch,
+                False, stream_id="r", caches=caches) is not None
+        caches.release()
+        triples = store.read(spark).select("subj", "pred", "obj").collect()
+        return calls["n"], sorted(tuple(r) for r in triples)
+
+    n_skip, want = drain("skip")
+    over_budget("streaming.skip_probe")
+    n_full, got = drain("full")
+    assert (n_skip, n_full) == (1, 2)
+    assert got == want
+
+
 def test_content_cache_rebase_preserves_dedup(spark, tmp_path, monkeypatch):
     """When the in-run content cache re-bases from the sidecars (every
     REBASE_EVERY extensions), content committed in ANY earlier epoch must

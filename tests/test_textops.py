@@ -320,10 +320,10 @@ def test_ngram_jaccard_short_docs_no_crash_and_oracle_parity(spark, tmp_path):
     assert all(a not in (1, 2, 3, 4) and b not in (1, 2, 3, 4) for a, b, _ in got)
 
 
-def test_decontaminate_shuffle_fallback_identical(spark, monkeypatch):
+def test_decontaminate_shuffle_fallback_identical(spark, over_budget):
     """Over the eval-gram broadcast budget t18 falls back to a shuffle join
     with identical rows."""
     expected = {tuple(r) for r in textops.t18_decontaminate(spark, SF).collect()}
-    monkeypatch.setattr(textops, "EVAL_BROADCAST_MAX_ROWS", 0)
+    over_budget("textops.t18")
     got = {tuple(r) for r in textops.t18_decontaminate(spark, SF).collect()}
     assert got == expected
