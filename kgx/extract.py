@@ -1,9 +1,13 @@
-"""contexts -> facts -> validated triples.
+"""pages -> contexts / facts -> validated triples.
 
 Replaces the reference's per-row OpenAI loop (scripts/run_pipeline.py:76-105)
-with a deterministic, schema-guided extractor running inside Arrow-batched
-mapInPandas — the batched-inference seam where a real model would slot in
-(load once per worker, score a batch at a time).
+with a deterministic, schema-guided extractor. Every per-page stage — html ->
+text, headings, section spans, category match, stage-3 retrieval, extraction —
+runs in ONE Arrow-batched pass per page (_page_pass): the per-document work
+is row-local, so the only shuffles left are the genuinely cross-document ones
+(canonicalization, the partitioned write). This is also the batched-inference
+seam where a real model slots in (kgx.embedder: load once per worker, embed a
+batch at a time).
 
 Methodology codes are validated against the CDM-style dimension
 (ground_truth_project_detail_formatter.py:110,178-179) via a
@@ -16,133 +20,136 @@ from_json StructTypes + required-field constraint checks in validate_triples.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from pyspark.sql.types import ArrayType
+from pyspark.sql import types as T
 
 from kgx import kernel
 from kgx.config import METHODOLOGY_CODES
-from kgx.schema import FACTS, OBJ_SCHEMAS, REQUIRED_FIELDS
+from kgx.schema import CONTEXTS, FACTS, OBJ_SCHEMAS, PAGE_TEXT, REQUIRED_FIELDS
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    # a real-model variant would load the model here, once per worker
-    for pdf in batches:
-        out: dict[str, list] = {f.name: [] for f in FACTS.fields}
-        for row in pdf.itertuples(index=False):
-            fact = kernel.extract_fact(row.category, row.context or "")
-            if fact is None:
-                continue
-            codes = surfaces = None
-            obj = kernel.canonical_json(fact)
-            if row.category == "methodology":
-                codes = fact  # validated relationally downstream
-                obj = None
-            elif row.category == "project_proponents":
-                surfaces = [p["organization_name"] for p in fact]
-            out["url"].append(row.url)
-            out["warc_ts"].append(row.warc_ts)
-            out["content_sha"].append(row.content_sha)
-            out["pred"].append(row.category)
-            out["obj"].append(obj)
-            out["codes"].append(codes)
-            out["surfaces"].append(surfaces)
-        if not out["url"]:
-            # a batch where no context yields a fact: pandas types the empty
-            # columns float64 and Arrow refuses the double->timestamp cast
-            continue
-        yield pd.DataFrame(out)
+def _arrow_type(dt: T.DataType):
+    import pyarrow as pa
+
+    if isinstance(dt, T.ArrayType):
+        return pa.list_(_arrow_type(dt.elementType))
+    return pa.timestamp("us") if isinstance(dt, T.TimestampType) else pa.string()
 
 
-def extract_facts(contexts: DataFrame) -> DataFrame:
-    return contexts.mapInPandas(_extract_batches, schema=FACTS)
-
-
-def _fused_arrow_batches(batches):
-    """Iterator[pyarrow.RecordBatch] -> Iterator[pyarrow.RecordBatch].
+def _page_pass(pages: DataFrame, schema: T.StructType, per_text) -> DataFrame:
+    """One mapInArrow over the pages: each page's html becomes text once,
+    and ``per_text(text)`` yields the page's output rows as tuples of the
+    ``schema`` columns after (url, warc_ts, content_sha).
 
     mapInArrow, not mapInPandas: the pandas conversion materializes every input
     column (including the multi-KB html payloads) into pandas objects before
     the UDF sees them — measured 3x slower than raw Arrow batches on a 1M-page
     corpus. We only need plain python values per row, which to_pylist() gives
-    directly."""
-    import hashlib
+    directly.
 
-    import pyarrow as pa
+    ``content_sha`` (sha256 of the raw html) is the lineage column mirroring
+    the reference's Redis content-hash cache key (initial_pipeline/app.py:
+    309-317).
 
-    out_type = pa.schema(
-        [
-            ("url", pa.string()),
-            ("warc_ts", pa.timestamp("us")),
-            ("content_sha", pa.string()),
-            ("pred", pa.string()),
-            ("obj", pa.string()),
-            ("codes", pa.list_(pa.string())),
-            ("surfaces", pa.list_(pa.string())),
-        ]
-    )
-    for b in batches:
-        cols = {name: b.column(i).to_pylist() for i, name in enumerate(b.schema.names)}
-        out: dict[str, list] = {f.name: [] for f in FACTS.fields}
-        for url, warc_ts, html in zip(cols["url"], cols["warc_ts"], cols["html"]):
-            # null html (failed fetch — a certainty in real WARC input)
-            # degrades to an empty page, never a task-killing TypeError
-            raw = bytes(html) if html is not None else b""
-            text = kernel.html_to_text(raw)
-            sha = hashlib.sha256(raw).hexdigest()
-            for cat, fact in kernel.page_facts(text):
-                codes = surfaces = None
-                obj = kernel.canonical_json(fact)
-                if cat == "methodology":
-                    codes, obj = fact, None
-                elif cat == "project_proponents":
-                    surfaces = [p["organization_name"] for p in fact]
-                out["url"].append(url)
-                out["warc_ts"].append(warc_ts)
-                out["content_sha"].append(sha)
-                out["pred"].append(cat)
-                out["obj"].append(obj)
-                out["codes"].append(codes)
-                out["surfaces"].append(surfaces)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(out[f.name], type=out_type.field(i).type)
-             for i, f in enumerate(FACTS.fields)],
-            schema=out_type,
-        )
+    Partition guard (kgx.util.spread): parquet scans can only split at
+    row-group boundaries, so an input written with giant row groups (or one
+    fat file) arrives as fewer partitions than cores and would run this
+    CPU-bound pass nearly serially — exactly what a 4000-page
+    single-row-group bench corpus did (4.9s -> 6.8s end-to-end). One
+    round-robin shuffle of the (url, warc_ts, html) projection buys full
+    parallelism for the dominant stage. At 100 TB inputs have ~10^5 splits
+    and the guard never fires; when it does fire the input layout was the
+    bottleneck, not the shuffle."""
+    from kgx.util import spread
+
+    names = [f.name for f in schema.fields]
+    types = [_arrow_type(f.dataType) for f in schema.fields]
+
+    def gen(batches):
+        import hashlib
+
+        import pyarrow as pa
+
+        out_schema = pa.schema(list(zip(names, types)))
+        for b in batches:
+            cols = {name: b.column(i).to_pylist() for i, name in enumerate(b.schema.names)}
+            out: list[list] = [[] for _ in names]
+            for url, warc_ts, html in zip(cols["url"], cols["warc_ts"], cols["html"]):
+                # null html (failed fetch — a certainty in real WARC input)
+                # degrades to an empty page, never a task-killing TypeError
+                raw = bytes(html) if html is not None else b""
+                text = kernel.html_to_text(raw)
+                sha = hashlib.sha256(raw).hexdigest()
+                for row in per_text(text):
+                    for col, v in zip(out, (url, warc_ts, sha, *row)):
+                        col.append(v)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(col, type=t) for col, t in zip(out, types)],
+                schema=out_schema,
+            )
+
+    slim = spread(pages.select("url", "warc_ts", "html"))
+    return slim.mapInArrow(gen, schema=schema)
+
+
+def extracted_text(pages: DataFrame) -> DataFrame:
+    """pages -> (url, warc_ts, content_sha, text): the extracted text every
+    other pass works on — pinned byte-identical per url by the tests."""
+    return _page_pass(pages, PAGE_TEXT, lambda text: [(text,)])
+
+
+_RETRIEVAL = {
+    "topk": kernel.select_context,
+    "redundant": kernel.select_context_redundant,
+    "best1": kernel.select_context_best1,
+}
+
+
+def page_contexts(pages: DataFrame, retrieval: str = "topk") -> DataFrame:
+    """pages -> CONTEXTS: stage-3 retrieval, one row per categorized section
+    of each crawl (kernel.page_contexts).
+
+    retrieval='topk': the top-ceil(n/2) chunks in document order
+    (context_extractor.py:126,149). 'redundant': those chunks minus
+    near-duplicates (cosine >= 0.95 against an earlier-retained chunk) — the
+    EmbeddingsRedundantFilter stage. 'best1': the full reference compression
+    pipeline, redundancy drop then EmbeddingsFilter(k=1) keep-best
+    (context_extractor.py:132-146).
+
+    The refined retrievals embed through the kgx.embedder seam: the factory
+    active now rides the closure, and each worker loads its model once and
+    embeds one section's chunks per call. With no model installed the
+    embeddings are kernel.hash_embed, byte-identical to the golden
+    extractor."""
+    if retrieval not in _RETRIEVAL:
+        raise ValueError(f"unknown retrieval {retrieval!r}")
+    select = _RETRIEVAL[retrieval]
+    if retrieval != "topk":
+        from kgx import embedder
+
+        select = partial(select, embed=partial(
+            embedder.embed_batch, factory=embedder.current_factory()))
+    return _page_pass(pages, CONTEXTS, partial(kernel.page_contexts, select=select))
+
+
+def _facts_of(text: str):
+    for cat, fact in kernel.page_facts(text):
+        codes = surfaces = None
+        obj = kernel.canonical_json(fact)
+        if cat == "methodology":
+            codes, obj = fact, None  # validated downstream
+        elif cat == "project_proponents":
+            surfaces = [p["organization_name"] for p in fact]
+        yield cat, obj, codes, surfaces
 
 
 def extract_facts_fused(pages: DataFrame) -> DataFrame:
-    """pages -> facts in ONE Arrow pass (html->text, headings, spans, category,
-    context top-k, extraction — all row-local kernel work).
-
-    This is the hot path at scale: the relational decomposition
-    (kgx.textextract + kgx.sections + extract_facts) computes identical output
-    — asserted by tests/test_pipeline.py — but spends ~6 shuffles and ~40
-    scheduler stages on per-document work; fused, the whole per-page chain is
-    embarrassingly parallel and the only shuffles left are the genuinely
-    cross-document ones (methodology semi-join re-collect, canonicalization,
-    the partitioned write).
-
-    Partition guard: parquet scans can only split at row-group boundaries, so
-    an input written with giant row groups (or one fat file) arrives as fewer
-    partitions than cores and would run this CPU-bound pass nearly serially —
-    exactly what a 4000-page single-row-group bench corpus did (4.9s -> 6.8s
-    end-to-end). When the scan yields fewer partitions than the session
-    parallelism (the threshold was cores//2 until round 6, which left e.g. a
-    5-partition batch running the kernel on 5 of 8 cores — measured 1.4x on
-    a 20k-page single-file micro-batch), one round-robin shuffle of the
-    (url, warc_ts, html) projection buys full parallelism for the dominant
-    stage. At 100 TB inputs have ~10^5 splits and the guard never fires;
-    when it does fire the input layout was the bottleneck, not the
-    shuffle."""
-    from kgx.util import spread
-
-    slim = spread(pages.select("url", "warc_ts", "html"))
-    return slim.mapInArrow(_fused_arrow_batches, schema=FACTS)
+    """pages -> FACTS in ONE Arrow pass (html->text, headings, spans,
+    category, context top-k, extraction — all row-local kernel work)."""
+    return _page_pass(pages, FACTS, _facts_of)
 
 
 def validate_methodologies(facts: DataFrame) -> DataFrame:
@@ -194,7 +201,7 @@ def _validity_column():
             return lambda x: x[f].isNull()
 
         for field in REQUIRED_FIELDS.get(pred, []):
-            if isinstance(schema, ArrayType):
+            if isinstance(schema, T.ArrayType):
                 # array<struct>: every element must carry the required field
                 ok = ok & (F.size(F.filter(parsed, _null_field(field))) == 0)
             else:

@@ -4,8 +4,8 @@ the Spark pandas-UDF path.
 This module is the single source of truth for the per-row invariant mandated by
 BASELINE.json:input_hint — "byte-identical extracted text per url". Both the
 fixture generator / golden extractor (kgx.fixtures) and the Arrow-batched Spark
-stages (kgx.textextract / kgx.extract) import THESE functions, so the invariant
-holds by construction and is additionally pinned by tests/test_kernel.py.
+page passes (kgx.extract) import THESE functions, so the invariant holds by
+construction and is additionally pinned by tests/test_kernel.py.
 
 Reference-parity notes (citations into /root/reference, read-only):
 - html -> text with boilerplate stripping mirrors the layout-aware extraction of
@@ -33,6 +33,7 @@ from __future__ import annotations
 
 import json
 import re
+from collections.abc import Iterator
 from datetime import datetime
 from html.parser import HTMLParser
 
@@ -223,9 +224,7 @@ def sections_from_text(text: str) -> list[dict]:
     """Headings -> [(section, start_off, end_off, body_off)] with end = next start.
 
     The end_off = next heading's start_off is the lead()-window semantic
-    (PDFExtraction.py:71 `end_page = start.shift(-1)`); in the Spark path this
-    is recomputed with a lead() window to exercise the operator, and
-    tests assert both agree.
+    (PDFExtraction.py:71 `end_page = start.shift(-1)`).
     """
     hs = find_headings(text)
     secs = []
@@ -265,10 +264,9 @@ def resolve_sections_last_match(text: str) -> dict[str, dict]:
     in order; the first variant with any compressed-containment match claims
     the category, and among that variant's matches the LAST heading in the
     document wins ('There can be up to 2 matches, we should go with the second
-    one / Since the first one can be the real TOC in the PDF'). The default
-    pipeline uses first-match-by-priority (categorize_heading); this variant
-    exists for reference parity and is mirrored relationally in
-    kgx.sections.categorize_last_match."""
+    one / Since the first one can be the real TOC in the PDF'). The pipeline
+    uses first-match-by-priority (categorize_heading); this variant exists
+    for reference parity and has no Spark-side caller."""
     secs = sections_from_text(text)
     out: dict[str, dict] = {}
     for cat, variants in HEADING_VARIANTS.items():
@@ -366,6 +364,10 @@ def _retrieved_order(chunks: list[str], category: str) -> list[int]:
     return [-neg_i for _, neg_i in scored[:k]]
 
 
+def _hash_embed_batch(texts: list[str]) -> list[list[float]]:
+    return [hash_embed(t) for t in texts]
+
+
 def redundancy_filter(embeds: list[list[float]], threshold: float = 0.95) -> list[int]:
     """Greedy near-duplicate drop in presentation order: position i survives
     iff its cosine vs every earlier survivor is < threshold. Mirrors
@@ -380,34 +382,38 @@ def redundancy_filter(embeds: list[list[float]], threshold: float = 0.95) -> lis
 
 def select_context_redundant(
     body: str, category: str, size: int = 2000, overlap: int = 50,
-    threshold: float = 0.95,
+    threshold: float = 0.95, embed=None,
 ) -> str:
     """Top-ceil(n/2) retrieval, then redundancy drop of near-duplicate chunks
     (in retrieval order), survivors re-joined in document order — the
-    EmbeddingsRedundantFilter stage of context_extractor.py:132-134."""
+    EmbeddingsRedundantFilter stage of context_extractor.py:132-134.
+
+    ``embed`` maps a batch of chunk texts to vectors (one call per section);
+    the default is hash_embed per text, which the goldens pin."""
     chunks = chunk_text(body, size=size, overlap=overlap)
     if len(chunks) <= 1:
         return body.strip()
     order = _retrieved_order(chunks, category)
-    embeds = [hash_embed(chunks[i]) for i in order]
+    embeds = (embed or _hash_embed_batch)([chunks[i] for i in order])
     kept = sorted(order[j] for j in redundancy_filter(embeds, threshold))
     return "\n".join(chunks[i].strip() for i in kept)
 
 
 def select_context_best1(
     body: str, category: str, size: int = 2000, overlap: int = 50,
-    threshold: float = 0.95,
+    threshold: float = 0.95, embed=None,
 ) -> str:
     """Full reference compression pipeline: retrieval top-k -> redundancy
     filter -> EmbeddingsFilter(k=1) keep the single most query-relevant
     survivor (context_extractor.py:136-146). Because retrieval order is
     already score-descending and the redundancy filter keeps the first of any
-    near-dup group, the best-1 survivor is the first kept position."""
+    near-dup group, the best-1 survivor is the first kept position.
+    ``embed`` as in select_context_redundant."""
     chunks = chunk_text(body, size=size, overlap=overlap)
     if len(chunks) <= 1:
         return body.strip()
     order = _retrieved_order(chunks, category)
-    embeds = [hash_embed(chunks[i]) for i in order]
+    embeds = (embed or _hash_embed_batch)([chunks[i] for i in order])
     kept = redundancy_filter(embeds, threshold)
     return chunks[order[kept[0]]].strip()
 
@@ -603,20 +609,28 @@ def extract_fact(category: str, context: str):
     return _EXTRACTORS[category](context)
 
 
-def page_facts(text: str) -> list[tuple[str, object]]:
-    """Full per-page fact extraction: sections -> categorize -> context ->
-    extract, in one pass. This is the single-document composition of the
-    kernels above, shared by the golden generator and the FUSED Spark path
-    (one Arrow batch pass per page instead of six relational stages — the
-    per-document work is row-local, so distributing it stage-by-stage only
-    buys shuffle and scheduler overhead at scale)."""
-    out: list[tuple[str, object]] = []
+def page_contexts(text: str, select=select_context) -> Iterator[tuple[str, str]]:
+    """Stage-3 retrieval of one page: (category, context) per categorized
+    section, in document order. ``select(body, category)`` is the retrieval
+    (select_context top-k, or select_context_{redundant,best1}). Two
+    sections that categorize alike yield two contexts, and a body-less
+    section yields ''."""
     for s in sections_from_text(text):
         cat = categorize_heading(s["title"])
         if cat is None:
             continue
-        body = text[s["body_off"] : s["end_off"]].strip()
-        ctx = select_context(body, cat)
+        yield cat, select(text[s["body_off"] : s["end_off"]].strip(), cat)
+
+
+def page_facts(text: str) -> list[tuple[str, object]]:
+    """Full per-page fact extraction: sections -> categorize -> context ->
+    extract, in one pass. This is the single-document composition of the
+    kernels above, shared by the golden generator and the Spark facts pass
+    (one Arrow batch pass per page — the per-document work is row-local, so
+    distributing it stage-by-stage only buys shuffle and scheduler overhead
+    at scale)."""
+    out: list[tuple[str, object]] = []
+    for cat, ctx in page_contexts(text):
         fact = extract_fact(cat, ctx)
         if fact is not None:
             out.append((cat, fact))

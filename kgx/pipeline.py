@@ -1,6 +1,6 @@
 """End-to-end KG-construction pipeline: pages -> triples.
 
-One lazy DataFrame chain (SURVEY.md §3.1 rebuild), default 'fused' mode:
+One lazy DataFrame chain (SURVEY.md §3.1 rebuild):
 pages -> ONE mapInArrow pass (html->text, validated headings, section spans,
          category match, context top-k, schema-guided extraction)
       -> methodology validation (broadcast-literal intersect)
@@ -8,9 +8,8 @@ pages -> ONE mapInArrow pass (html->text, validated headings, section spans,
          (global dictionary, broadcast-dict rewrite)
       -> (subj, pred, obj) triples with lineage columns.
 
-mode='relational' runs the same semantics as the operator-by-operator
-decomposition (lead windows, broadcast category join, chunk explode) and is
-asserted byte-equal in tests.
+The golden single-process extractor (kgx.fixtures) composes the same kernel
+functions, and the tests pin P/R against it.
 
 spark-submit entry point at the bottom (--py-files packaging: tools/package.sh
 builds dist/kgx.zip). The only driver-side materializations are
@@ -27,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kgx import budget, canon, extract, kernel, sections, textextract
+from kgx import budget, canon, extract, kernel
 
 
 def subj_col(url_col):
@@ -212,55 +211,27 @@ def _canonicalize(
 
 
 def extract_stage(
-    spark: SparkSession, pages: DataFrame, mode: str = "fused",
-    persist: bool = True,
+    spark: SparkSession, pages: DataFrame, persist: bool = True,
 ) -> DataFrame:
-    """pages -> validated facts (everything before canonicalization).
+    """pages -> validated facts (everything before canonicalization): one
+    Arrow pass per page for all row-local work (extract.extract_facts_fused),
+    then the methodology validation.
 
     ``persist=True`` (default) returns the validated frame persisted
     MEMORY_AND_DISK — callers that act on it more than once (the streaming
     epoch, build_triples' mapping + write) would otherwise re-run the Arrow
     kernel per action; the returned frame IS the persisted handle, so the
-    caller releases it when the epoch/run ends. Pass ``persist=False`` when
-    exactly one action consumes the result (run_checkpointed phase A, which
-    writes it straight to staging parquet) — populating a one-use cache
-    during that single write is pure overhead.
-
-    mode='fused' (default, the scale path): one Arrow pass per page for all
-    row-local work (extract.extract_facts_fused), then the genuinely
-    cross-document relational stages.
-
-    mode='relational': the operator-by-operator decomposition (lead-window
-    spans, broadcast category join, chunk-explode top-k) — same output,
-    asserted equal in tests; kept as the cross-validation path and the
-    demonstration of each SURVEY.md §2 operator in the pipeline itself. Its
-    multi-branch plan re-executes the html->text kernel without persist(), so
-    the kernel intermediate is ALWAYS cached in this mode (that inner handle
-    has no release path — acceptable on the cross-validation/test path, not
-    offered on the scale path). Under-parallelized sources are spread inside
-    extract_facts_fused / kernel_pass's shared partition guard."""
+    caller releases it when the epoch/run ends (a long-running stream must
+    not accumulate one pinned facts cache per micro-batch). The validated
+    frame is the cache point because validation is a narrow broadcast-literal
+    rewrite — no shuffle, so caching above or below it is equivalent. Pass
+    ``persist=False`` when exactly one action consumes the result
+    (run_checkpointed phase A, which writes it straight to staging parquet)
+    — populating a one-use cache during that single write is pure
+    overhead."""
     from pyspark import StorageLevel
 
-    if mode == "fused":
-        # the VALIDATED frame is the cache point (validation is a narrow
-        # broadcast-literal rewrite — no shuffle, so caching above or below
-        # it is equivalent): downstream consumers (mentions,
-        # canonicalization, commit write, content sidecar) are separate
-        # plan branches that would each re-run the Arrow kernel, and
-        # returning the persisted handle itself lets the caller RELEASE it
-        # when the epoch ends — a long-running stream must not accumulate
-        # one pinned facts cache per micro-batch (round-6 review)
-        validated = extract.validate_methodologies(
-            extract.extract_facts_fused(pages)
-        )
-        if persist:
-            validated = validated.persist(StorageLevel.MEMORY_AND_DISK)
-        return validated
-
-    kdf = textextract.kernel_pass(pages).persist(StorageLevel.MEMORY_AND_DISK)
-    ctx = sections.build_contexts(spark, kdf)
-    facts = extract.extract_facts(ctx)
-    validated = extract.validate_methodologies(facts)
+    validated = extract.validate_methodologies(extract.extract_facts_fused(pages))
     if persist:
         validated = validated.persist(StorageLevel.MEMORY_AND_DISK)
     return validated
@@ -281,10 +252,9 @@ def build_triples(
     spark: SparkSession,
     pages: DataFrame,
     mapping: DataFrame | None = None,
-    mode: str = "fused",
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> triples DF (not yet written)."""
-    facts = extract_stage(spark, pages, mode=mode)
+    facts = extract_stage(spark, pages)
     return _to_triples(canonicalize_proponents(facts, mapping))
 
 

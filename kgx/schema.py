@@ -20,20 +20,13 @@ PAGES = T.StructType(
     ]
 )
 
-# output of the heading/section kernel stage (offsets into extracted text)
-SECTIONS_RAW = T.StructType(
+# extract.extracted_text: the per-page text every pass works on
+PAGE_TEXT = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
         T.StructField("warc_ts", T.TimestampType(), True),
         T.StructField("content_sha", T.StringType(), True),
         T.StructField("text", T.StringType(), True),
-        T.StructField("text_len", T.IntegerType(), True),
-        T.StructField("sec_idx", T.IntegerType(), True),
-        T.StructField("number", T.StringType(), True),
-        T.StructField("title", T.StringType(), True),
-        T.StructField("heading", T.StringType(), True),
-        T.StructField("start_off", T.IntegerType(), True),
-        T.StructField("body_off", T.IntegerType(), True),
     ]
 )
 

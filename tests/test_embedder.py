@@ -1,22 +1,21 @@
 """The import-gated embedding seam (kgx.embedder): fallback parity with the
 pure kernel, once-per-worker model loads, and real end-to-end plumbing through
-the redundancy-filter path with an injected fake model."""
+the redundancy-filter retrieval (extract.page_contexts) with an injected fake
+model."""
 
 from __future__ import annotations
 
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
-from kgx import embedder, fixtures, kernel, sections, textextract
+from kgx import embedder, extract, kernel
 
 
 @pytest.fixture(autouse=True)
 def _reset_factory():
     yield
     embedder.set_model_factory(None)
-    sections.release_context_caches()
 
 
 def test_fallback_is_hash_embed_byte_identical():
@@ -41,8 +40,8 @@ def test_embed_udf_matches_kernel(spark):
         assert r.e == pytest.approx(kernel.hash_embed(r.text))
 
 
-def _multi_chunk_bodies(spark, n_groups: int = 6):
-    """Bodies whose chunk_text split yields >=2 DISTINCT chunks per group —
+def _multi_chunk_pages(spark, n_pages: int = 6):
+    """Pages whose one categorized section splits into >=2 DISTINCT chunks —
     the fixture corpus bodies are mostly single-chunk and would bypass the
     embedding path entirely (the single-chunk fast path)."""
     import random
@@ -52,29 +51,22 @@ def _multi_chunk_bodies(spark, n_groups: int = 6):
     words_a = ["solar", "grid", "inverter", "panel", "megawatt", "tariff"]
     words_b = ["forest", "canopy", "biomass", "seedling", "hectare", "carbon"]
     rows = []
-    for i in range(n_groups):
+    for i in range(n_pages):
         para_a = " ".join(rng.choice(words_a) for _ in range(400))
         para_b = " ".join(rng.choice(words_b) for _ in range(400))
-        rows.append(
-            (
-                f"https://ex.org/proj/{i:06d}",
-                datetime(2026, 1, 1),
-                f"sha{i:064d}"[:64],
-                0,
-                "sector",
-                para_a + "\n" + para_b,
-            )
-        )
-    return spark.createDataFrame(
-        rows,
-        "url string, warc_ts timestamp, content_sha string, sec_idx int, "
-        "category string, body string",
-    )
+        html = (
+            "<html><body><h1>1. PROJECT DETAILS</h1>"
+            "<h2>1.1 SECTORAL SCOPE AND TYPE OF PROJECT</h2>"
+            f"<p>{para_a}</p><p>{para_b}</p></body></html>"
+        ).encode()
+        assert len(kernel.chunk_text(kernel.html_to_text(html))) >= 2
+        rows.append((f"https://ex.org/proj/{i:06d}", datetime(2026, 1, 1), html))
+    return spark.createDataFrame(rows, "url string, warc_ts timestamp, html binary")
 
 
 def test_injected_model_loads_once_per_worker_and_flows(spark, tmp_path):
-    bodies = _multi_chunk_bodies(spark).localCheckpoint()
-    n_groups = bodies.count()
+    pages = _multi_chunk_pages(spark).localCheckpoint()
+    n_pages = pages.count()
 
     log = str(tmp_path / "loads.log")
 
@@ -93,22 +85,19 @@ def test_injected_model_loads_once_per_worker_and_flows(spark, tmp_path):
         def encode(self, texts):
             return [[1.0] + [0.0] * 63 for _ in texts]
 
+    def contexts(retrieval):
+        return {
+            (r.url, r.category): r.context
+            for r in extract.page_contexts(pages, retrieval).collect()
+        }
+
     embedder.set_model_factory(CountingFakeModel)
-    fake_rows = {
-        (r.url, r.category): r.context
-        for r in sections.contexts_refined(bodies, mode="redundant").collect()
-    }
-    assert len(fake_rows) == n_groups
+    fake_rows = contexts("redundant")
+    assert len(fake_rows) == n_pages
 
     embedder.set_model_factory(None)
-    best1 = {
-        (r.url, r.category): r.context
-        for r in sections.contexts_refined(bodies, mode="best1").collect()
-    }
-    fallback = {
-        (r.url, r.category): r.context
-        for r in sections.contexts_refined(bodies, mode="redundant").collect()
-    }
+    best1 = contexts("best1")
+    fallback = contexts("redundant")
     # plumbing proof: constant injected embeddings make every chunk a near-dup
     # of the best one, collapsing 'redundant' to the best1 output — while the
     # hash-embed fallback keeps the dissimilar chunks apart
@@ -120,9 +109,9 @@ def test_injected_model_loads_once_per_worker_and_flows(spark, tmp_path):
         pids = [line.strip() for line in f if line.strip()]
     assert pids, "fake model never constructed on any worker"
     # once per worker PROCESS: no pid constructed the model twice, and the
-    # total construction count is bounded by workers, not by groups/batches
+    # total construction count is bounded by workers, not by pages/batches
     assert len(pids) == len(set(pids))
-    assert len(pids) < n_groups
+    assert len(pids) < n_pages
 
 
 def test_default_factory_selects_real_model_when_importable(monkeypatch):

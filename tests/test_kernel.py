@@ -155,3 +155,27 @@ def test_fixture_generator_deterministic():
 
 def test_canonical_json_stable():
     assert kernel.canonical_json({"b": 1, "a": -24.019}) == '{"a":-24.019,"b":1}'
+
+
+def test_last_match_resolution_parity_and_differs_from_first():
+    """resolve_sections_last_match (app.py:245-271 'second match wins'): on a
+    duplicate-heading doc it picks the LATER heading where first-match
+    (categorize_heading in document order) picks the earlier one."""
+    html = (
+        "<html><body>"
+        "<h1>1. INTRO</h1>"
+        "<h2>1.1 PROJECT PROPONENT (S)</h2><p>first occurrence</p>"
+        "<h2>1.2 OTHER</h2><p>x</p>"
+        "<h1>2. ANNEX</h1>"
+        "<h2>2.1 PROJECT PROPONENT DETAILS</h2><p>second occurrence</p>"
+        "</body></html>"
+    )
+    text = kernel.html_to_text(html)
+    firsts = {}
+    for s in kernel.sections_from_text(text):
+        cat = kernel.categorize_heading(s["title"])
+        if cat:
+            firsts.setdefault(cat, s)  # first document-order match
+    res = kernel.resolve_sections_last_match(text)
+    assert res["project_proponents"]["number"] == "2.1"
+    assert firsts["project_proponents"]["number"] == "1.1"

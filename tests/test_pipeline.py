@@ -10,7 +10,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from kgx import budget, canon, extract, fixtures, kernel, pipeline, sections, textextract
+from kgx import budget, canon, extract, fixtures, kernel, pipeline
 
 N_PAGES = 200
 
@@ -25,33 +25,45 @@ def pages_df(spark, pages_rows):
     return spark.createDataFrame(pd.DataFrame(pages_rows)).cache()
 
 
-@pytest.fixture(scope="module")
-def kernel_df(spark, pages_df):
-    return textextract.kernel_pass(pages_df).cache()
+def _one_page_df(spark, url, html):
+    import datetime
+
+    return spark.createDataFrame(pd.DataFrame([{
+        "url": url, "warc_ts": datetime.datetime(2024, 1, 1),
+        "html": html, "text": kernel.html_to_text(html), "lang": "en",
+    }]))
 
 
 def test_extracted_text_byte_identical_per_url(spark, pages_df, pages_rows):
-    got = {r.url: r.text for r in textextract.extracted_text(pages_df).collect()}
+    got = {r.url: r.text for r in extract.extracted_text(pages_df).collect()}
     for p in pages_rows:
         assert got[p["url"]] == p["text"], p["url"]
 
 
-def test_lead_window_spans_match_kernel(spark, pages_rows, kernel_df):
-    spans = sections.section_spans(textextract.heading_rows(kernel_df))
-    got = {
-        (r.url, r.start_off): (r.end_off, r.body_off)
-        for r in spans.collect()
-    }
-    n = 0
-    for p in pages_rows:
-        for s in kernel.sections_from_text(p["text"]):
-            assert got[(p["url"], s["start_off"])] == (s["end_off"], s["body_off"])
-            n += 1
-    assert n == len(got) > 0
+def test_null_html_page_degrades_to_empty(spark):
+    """A failed fetch (null html) is an empty page in every page pass: text
+    '', no facts, no contexts, and no task-killing TypeError for it or for
+    the healthy page beside it."""
+    from kgx.schema import PAGES
+
+    good = fixtures.gen_pages(1)[0]
+    failed = "https://t.example.com/proj/000404"
+    pages = spark.createDataFrame(
+        [(failed, None, None, None, "en"),
+         (good["url"], good["warc_ts"], good["html"], good["text"], "en")],
+        PAGES,
+    ).coalesce(1)
+    text = {r.url: r.text for r in extract.extracted_text(pages).collect()}
+    assert text == {failed: "", good["url"]: good["text"]}
+    facts = extract.extract_facts_fused(pages).collect()
+    assert facts and {r.url for r in facts} == {good["url"]}
+    for retrieval in ("topk", "redundant", "best1"):
+        ctx = extract.page_contexts(pages, retrieval).collect()
+        assert ctx and {r.url for r in ctx} == {good["url"]}
 
 
-def test_contexts_match_golden(spark, pages_rows, kernel_df):
-    ctx = sections.build_contexts(spark, kernel_df)
+def test_contexts_match_golden(spark, pages_rows, pages_df):
+    ctx = extract.page_contexts(pages_df)
     got = {(r.url, r.category, r.context) for r in ctx.collect()}
     gold = {
         (c["url"], c["category"], c["context"])
@@ -60,62 +72,13 @@ def test_contexts_match_golden(spark, pages_rows, kernel_df):
     assert got == gold
 
 
-def test_last_match_resolution_parity_and_differs_from_first(spark, pages_rows, kernel_df):
-    """categorize_last_match (app.py:245-271 'second match wins') matches the
-    kernel mirror on the whole fixture corpus, and on a duplicate-heading doc
-    it picks the LATER heading where first-match picks the earlier one."""
-    spans = sections.section_spans(textextract.heading_rows(kernel_df))
-    got = {
-        (r.url, r.category): r.start_off
-        for r in sections.categorize_last_match(spans, sections.variant_dim(spark)).collect()
-    }
-    want = {}
-    for p in pages_rows:
-        for cat, s in kernel.resolve_sections_last_match(p["text"]).items():
-            want[(p["url"], cat)] = s["start_off"]
-    assert got == want and got
-
-    html = (
-        "<html><body>"
-        "<h1>1. INTRO</h1>"
-        "<h2>1.1 PROJECT PROPONENT (S)</h2><p>first occurrence</p>"
-        "<h2>1.2 OTHER</h2><p>x</p>"
-        "<h1>2. ANNEX</h1>"
-        "<h2>2.1 PROJECT PROPONENT DETAILS</h2><p>second occurrence</p>"
-        "</body></html>"
-    ).encode()
-    text = kernel.html_to_text(html)
-    res = kernel.resolve_sections_last_match(text)
-    secs = kernel.sections_from_text(text)
-    firsts = {}
-    for s in secs:
-        cat = kernel.categorize_heading(s["title"])
-        if cat:
-            firsts.setdefault(cat, s)  # first document-order match
-    assert res["project_proponents"]["number"] == "2.1"
-    assert firsts["project_proponents"]["number"] == "1.1"
-    import datetime
-    pdf = pd.DataFrame([{
-        "url": "https://t.example.com/proj/000002",
-        "warc_ts": datetime.datetime(2024, 1, 1),
-        "html": html, "text": text, "lang": "en",
-    }])
-    kdf = textextract.kernel_pass(spark.createDataFrame(pdf))
-    spans2 = sections.section_spans(textextract.heading_rows(kdf))
-    got2 = {
-        r.category: r.number
-        for r in sections.categorize_last_match(spans2, sections.variant_dim(spark)).collect()
-    }
-    assert got2["project_proponents"] == "2.1"
-
-
-@pytest.mark.parametrize("mode", ["redundant", "best1"])
-def test_contexts_refined_match_golden(spark, pages_rows, kernel_df, mode):
-    ctx = sections.build_contexts_refined(spark, kernel_df, mode=mode)
+@pytest.mark.parametrize("retrieval", ["redundant", "best1"])
+def test_contexts_refined_match_golden(spark, pages_rows, pages_df, retrieval):
+    ctx = extract.page_contexts(pages_df, retrieval)
     got = {(r.url, r.category, r.context) for r in ctx.collect()}
     gold = {
         (c["url"], c["category"], c["context"])
-        for c in fixtures.golden_contexts_refined(pages_rows, mode=mode)
+        for c in fixtures.golden_contexts_refined(pages_rows, mode=retrieval)
     }
     assert got == gold
 
@@ -141,18 +104,10 @@ def test_redundancy_filter_drops_duplicate_chunks(spark):
         f"<p>{'</p><p>'.join(f'unique marker {i}. {para}' for i in range(4))}</p>"
         "</body></html>"
     ).encode()
-    import datetime
-    pdf = pd.DataFrame([{
-        "url": "https://t.example.com/proj/000001",
-        "warc_ts": datetime.datetime(2024, 1, 1),
-        "html": html,
-        "text": kernel.html_to_text(html),
-        "lang": "en",
-    }])
-    kdf = textextract.kernel_pass(spark.createDataFrame(pdf))
-    got_red = sections.build_contexts_refined(spark, kdf, mode="redundant").collect()
-    got_best = sections.build_contexts_refined(spark, kdf, mode="best1").collect()
-    page_text = pdf["text"][0]
+    pages = _one_page_df(spark, "https://t.example.com/proj/000001", html)
+    got_red = extract.page_contexts(pages, "redundant").collect()
+    got_best = extract.page_contexts(pages, "best1").collect()
+    page_text = kernel.html_to_text(html)
     sec = [s for s in kernel.sections_from_text(page_text)
            if kernel.categorize_heading(s["title"]) == cat][0]
     sbody = page_text[sec["body_off"]:sec["end_off"]].strip()
@@ -194,16 +149,6 @@ def test_join_rewrite_byte_equal_to_broadcast(spark, pages_df, over_budget):
         ).collect()
     )
     assert raw != expected
-
-
-def test_fused_equals_relational(spark, pages_df):
-    """The one-Arrow-pass hot path and the operator-by-operator relational
-    decomposition must produce identical triples."""
-    fused = pipeline.build_triples(spark, pages_df, mode="fused")
-    rel = pipeline.build_triples(spark, pages_df, mode="relational")
-    f = {(r.subj, r.pred, r.obj) for r in fused.collect()}
-    r = {(r.subj, r.pred, r.obj) for r in rel.collect()}
-    assert f == r
 
 
 def test_constraint_checks_zero_violations(spark, pages_df):
@@ -419,8 +364,6 @@ def test_duplicate_category_sections_stay_separate(spark):
     """Two sections of one document that categorize identically must emit TWO
     contexts (the golden path is per-section); a (url, category) grouping
     would merge and garble them."""
-    import datetime
-
     html = (
         "<html><body>"
         "<h1>1. INTRO</h1>"
@@ -430,15 +373,10 @@ def test_duplicate_category_sections_stay_separate(spark):
         "</body></html>"
     ).encode()
     text = kernel.html_to_text(html)
-    pdf = pd.DataFrame([{
-        "url": "https://t.example.com/proj/000042",
-        "warc_ts": datetime.datetime(2024, 1, 1),
-        "html": html, "text": text, "lang": "en",
-    }])
-    kdf = textextract.kernel_pass(spark.createDataFrame(pdf))
+    pages = _one_page_df(spark, "https://t.example.com/proj/000042", html)
     got = sorted(
         (r.category, r.context)
-        for r in sections.build_contexts(spark, kdf).collect()
+        for r in extract.page_contexts(pages).collect()
     )
     gold = sorted(
         (kernel.categorize_heading(s["title"]),
@@ -454,8 +392,6 @@ def test_duplicate_category_sections_stay_separate(spark):
 def test_empty_body_section_emits_empty_context(spark):
     """A heading directly followed by the next heading (zero-length body)
     must still emit a context row ('' like the golden path), not vanish."""
-    import datetime
-
     html = (
         "<html><body>"
         "<h1>1. PROJECT DETAILS</h1>"
@@ -464,14 +400,9 @@ def test_empty_body_section_emits_empty_context(spark):
         "</body></html>"
     ).encode()
     text = kernel.html_to_text(html)
-    pdf = pd.DataFrame([{
-        "url": "https://t.example.com/proj/000043",
-        "warc_ts": datetime.datetime(2024, 1, 1),
-        "html": html, "text": text, "lang": "en",
-    }])
-    kdf = textextract.kernel_pass(spark.createDataFrame(pdf))
+    pages = _one_page_df(spark, "https://t.example.com/proj/000043", html)
     got = {(r.category, r.context)
-           for r in sections.build_contexts(spark, kdf).collect()}
+           for r in extract.page_contexts(pages).collect()}
     gold = {(c["category"], c["context"])
             for c in fixtures.golden_contexts(
                 [{"url": "https://t.example.com/proj/000043", "text": text}])}
@@ -479,20 +410,12 @@ def test_empty_body_section_emits_empty_context(spark):
     assert any(ctx == "" for _, ctx in got)
 
 
-@pytest.fixture(autouse=True)
-def _release_ctx_caches():
-    """Relational retrieval persists its chunk frame; drop it after each test
-    so the suite never accumulates executor-memory caches."""
-    yield
-    sections.release_context_caches()
-
-
 def test_recrawled_url_retrieval_keeps_crawls_separate(spark):
     """Two crawls of one url whose same-index section categorizes identically
     must emit one context per crawl, each computed only from its own chunks —
-    through ALL THREE retrieval modes. A (url, category, sec_idx) window
-    merges the crawls: n_chunks counts across both and top-ceil(n/2)
-    interleaves chunks from different page versions (ADVICE r4)."""
+    through ALL THREE retrievals. Merging the crawls would count chunks
+    across both and interleave chunks from different page versions in the
+    top-ceil(n/2) cut."""
     import datetime
 
     para_a = "alpha fact sentence about the project proponent entity. " * 50
@@ -516,7 +439,7 @@ def test_recrawled_url_retrieval_keeps_crawls_separate(spark):
         {"url": url, "warc_ts": datetime.datetime(2024, 6, 1), "html": h2,
          "text": t2, "lang": "en"},
     ]
-    kdf = textextract.kernel_pass(spark.createDataFrame(pd.DataFrame(rows)))
+    pages = spark.createDataFrame(pd.DataFrame(rows))
 
     def gold(text, fn):
         sec = [s for s in kernel.sections_from_text(text)
@@ -525,14 +448,13 @@ def test_recrawled_url_retrieval_keeps_crawls_separate(spark):
         assert len(kernel.chunk_text(body)) > 2, "fixture must be multi-chunk"
         return fn(body, "project_proponents")
 
-    for build, fn in [
-        (lambda: sections.build_contexts(spark, kdf), kernel.select_context),
-        (lambda: sections.build_contexts_refined(spark, kdf, mode="redundant"),
-         kernel.select_context_redundant),
-        (lambda: sections.build_contexts_refined(spark, kdf, mode="best1"),
-         kernel.select_context_best1),
+    for retrieval, fn in [
+        ("topk", kernel.select_context),
+        ("redundant", kernel.select_context_redundant),
+        ("best1", kernel.select_context_best1),
     ]:
-        got = {(str(r.warc_ts), r.category, r.context) for r in build().collect()}
+        got = {(str(r.warc_ts), r.category, r.context)
+               for r in extract.page_contexts(pages, retrieval).collect()}
         want = {
             ("2024-01-01 00:00:00", "project_proponents", gold(t1, fn)),
             ("2024-06-01 00:00:00", "project_proponents", gold(t2, fn)),
@@ -540,36 +462,30 @@ def test_recrawled_url_retrieval_keeps_crawls_separate(spark):
         assert got == want
 
 
-def test_release_context_caches_unpersists(spark, kernel_df):
-    """build_contexts_refined persists the exploded-chunk frame; after
-    materialization + release_context_caches() no retrieval cache may remain
-    in executor storage (VERDICT r4 #7)."""
-    sections.release_context_caches()
-    storage = spark.sparkContext._jsc.sc().getRDDStorageInfo
-    before = len(storage())
-    ctx = sections.build_contexts_refined(spark, kernel_df, mode="redundant")
-    ctx.count()
-    assert sections._CACHED_CHUNKS, "retrieval path no longer tracks its cache"
-    sections.release_context_caches()
-    assert not sections._CACHED_CHUNKS
-    assert len(storage()) <= before
-
-
 def test_recrawled_url_relational_equals_fused(spark):
     """The same url crawled twice (different content, different warc_ts):
-    mode='relational' must produce the same facts as the row-local fused
-    path — url-only windows/joins interleaved the two versions."""
+    the facts of each crawl must be exactly kernel.page_facts over that
+    crawl's OWN text — nothing keyed by url alone may mix the two versions."""
+    import datetime
+
     pages = fixtures.gen_pages(4)
     recrawl = {**pages[1], "url": pages[0]["url"],
-               "warc_ts": pages[0]["warc_ts"] + __import__("datetime").timedelta(days=30)}
-    df = spark.createDataFrame(pd.DataFrame(pages[:3] + [recrawl]))
+               "warc_ts": pages[0]["warc_ts"] + datetime.timedelta(days=30)}
+    crawls = pages[:3] + [recrawl]
+    df = spark.createDataFrame(pd.DataFrame(crawls))
 
-    def key_set(facts):
-        return {
-            (r.url, str(r.warc_ts), r.content_sha, r.pred, r.obj)
-            for r in facts.select("url", "warc_ts", "content_sha", "pred", "obj").collect()
-        }
-
-    fused = key_set(pipeline.extract_stage(spark, df, mode="fused"))
-    relational = key_set(pipeline.extract_stage(spark, df, mode="relational"))
-    assert relational == fused
+    got: dict[tuple, list] = {}
+    for r in extract.extract_facts_fused(df).collect():
+        # methodology facts carry their codes in the side channel until
+        # validation fills obj
+        obj = kernel.canonical_json(r.codes) if r.pred == "methodology" else r.obj
+        got.setdefault((r.url, str(r.warc_ts)), []).append((r.pred, obj))
+    want = {
+        (p["url"], str(p["warc_ts"])): [
+            (c, kernel.canonical_json(f)) for c, f in kernel.page_facts(p["text"])]
+        for p in crawls
+    }
+    assert len(want) == 4 and len({u for u, _ in want}) == 3
+    assert all(want.values())
+    assert {k: sorted(v) for k, v in got.items()} == {
+        k: sorted(v) for k, v in want.items()}
